@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{AnalysisException, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -16,92 +16,102 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 object GraftFunctions {
 
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "kmer_windows" -> { exprs =>
-      kmer.KmerGenerator(exprs.head, exprs(1).eval(null).asInstanceOf[Number].intValue())
-    },
-    "kmer_windows_pos" -> { exprs =>
-      kmer.KmerGenerator(
-        exprs.head, exprs(1).eval(null).asInstanceOf[Number].intValue(), withPos = true)
-    },
-    "ngram_hashes" -> { exprs =>
-      text.NgramHashGenerator(
-        exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue(),
-        exprs(2).eval(null).asInstanceOf[Number].intValue())
-    },
+  private type Builder = Seq[Expression] => Expression
+
+  /** The arguments of one call of function `fn`. */
+  private final class Args(fn: String, es: Seq[Expression]) {
+    def apply(i: Int): Expression = es(i)
+    def length: Int = es.length
+
+    /** Argument `i`, named `param`, which must be an integer literal. */
+    def int(i: Int, param: String): Int = {
+      val e = es(i)
+      if (!e.foldable)
+        throw new AnalysisException("NON_FOLDABLE_ARGUMENT", Map(
+          "funcName" -> s"`$fn`", "paramName" -> s"`$param`", "paramType" -> "INT"))
+      e.eval() match {
+        case n: Number => n.intValue()
+        case v => throw new AnalysisException("INVALID_PARAMETER_VALUE.INTEGER", Map(
+          "parameter" -> s"`$param`", "functionName" -> s"`$fn`", "invalidValue" -> String.valueOf(v)))
+      }
+    }
+  }
+
+  /** Function `name`, callable with any of the `arities` argument counts. */
+  private def fn(name: String, arities: Int*)(build: Args => Expression): (String, Builder) =
+    name -> { es =>
+      if (!arities.contains(es.length))
+        throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+          "functionName" -> s"`$name`", "expectedNum" -> arities.mkString(" or "),
+          "actualNum" -> es.length.toString, "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
+      build(new Args(name, es))
+    }
+
+  private val builders: Seq[(String, Builder)] = Seq(
+    fn("kmer_windows", 2)(a => kmer.KmerGenerator(a(0), a.int(1, "k"))),
+    fn("kmer_windows_pos", 2)(a => kmer.KmerGenerator(a(0), a.int(1, "k"), withPos = true)),
+    fn("ngram_hashes", 3)(a =>
+      text.NgramHashGenerator(a(0), a.int(1, "minN"), a.int(2, "maxN"))),
     // rolling_hashes(text, k[, keepMod]): all k-window hashes, or the
     // content-defined h % keepMod == 0 sample filtered INSIDE the
     // generator (discarded windows never become rows)
-    "rolling_hashes" -> { exprs =>
-      text.RollingHashGenerator(
-        exprs.head, exprs(1).eval(null).asInstanceOf[Number].intValue(),
-        winnowW = 0,
-        keepMod =
-          if (exprs.length > 2) exprs(2).eval(null).asInstanceOf[Number].intValue() else 1)
-    },
-    "winnow_fingerprints" -> { exprs =>
-      text.RollingHashGenerator(
-        exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue(),
-        exprs(2).eval(null).asInstanceOf[Number].intValue())
-    },
+    fn("rolling_hashes", 2, 3)(a =>
+      text.RollingHashGenerator(a(0), a.int(1, "k"), winnowW = 0,
+        keepMod = if (a.length > 2) a.int(2, "keepMod") else 1)),
+    fn("winnow_fingerprints", 3)(a =>
+      text.RollingHashGenerator(a(0), a.int(1, "k"), a.int(2, "w"))),
     // ac_matches(text, 'p1|p2|…'): every occurrence of every literal
     // pattern (overlapping included) via a per-executor-cached
     // Aho-Corasick automaton — O(text + matches), dictionary-size-free
-    "ac_matches" -> { exprs => text.AhoCorasickGenerator(exprs.head, exprs(1)) },
+    fn("ac_matches", 2)(a => text.AhoCorasickGenerator(a(0), a(1))),
     // wordpiece_pieces(word, 'p1|p2|…'): greedy longest-match subword
     // segmentation against a per-executor-cached trie; pid -1 = UNK
-    "wordpiece_pieces" -> { exprs => text.WordPieceGenerator(exprs.head, exprs(1)) },
+    fn("wordpiece_pieces", 2)(a => text.WordPieceGenerator(a(0), a(1))),
     // topk_pairs(score, id, k): bounded-heap per-group top-k aggregate
     // (k-sized state, map-side-combinable) — the no-window-sort top-N
-    "topk_pairs" -> { exprs => functions.TopKPairs(exprs(0), exprs(1), exprs(2)) },
-    "dot_i64" -> { exprs => functions.DotI64(exprs.head, exprs(1)) },
+    fn("topk_pairs", 3)(a => functions.TopKPairs(a(0), a(1), a(2))),
+    fn("dot_i64", 2)(a => functions.DotI64(a(0), a(1))),
     // dot_feats_w(feats, w): sparse (bucket, count) · dense weights —
     // the perceptron margin as one codegen'd loop (no per-element HOF
     // interpretation); see functions.DotFeatsW
-    "dot_feats_w" -> { exprs => functions.DotFeatsW(exprs.head, exprs(1)) },
+    fn("dot_feats_w", 2)(a => functions.DotFeatsW(a(0), a(1))),
     // lcs_len(a, b): longest common SUBSEQUENCE length over two token
     // arrays — the ROUGE-L core as one codegen'd two-row DP loop
-    "lcs_len" -> { exprs => functions.LcsLen(exprs.head, exprs(1)) },
+    fn("lcs_len", 2)(a => functions.LcsLen(a(0), a(1))),
     // unigram_segment(w, m, maxPiece): Viterbi DP + backwalk over one
     // word under a (pos*8+len → score) candidate map — the unigram-LM
     // EM hot loop as one codegen'd pass (no per-element HOF
     // interpretation, no per-step accumulator array copies)
-    "unigram_segment" -> { exprs =>
-      functions.UnigramSegment(
-        exprs.head, exprs(1), exprs(2).eval(null).asInstanceOf[Number].intValue())
-    },
+    fn("unigram_segment", 3)(a =>
+      functions.UnigramSegment(a(0), a(1), a.int(2, "maxPiece"))),
     // common_run_len(ta, pa, tb, pb, bound, step): maximal aligned
     // char run extending right (step=+1) or left (step=-1) from two
     // seed anchors — the winnowing seed extension as one byte-walking
     // codegen'd pass (no per-block interpreted substring re-scans)
-    "common_run_len" -> { exprs =>
-      functions.CommonRunLen(
-        exprs(0), exprs(1), exprs(2), exprs(3), exprs(4),
-        exprs(5).eval(null).asInstanceOf[Number].intValue())
-    },
+    fn("common_run_len", 6)(a =>
+      functions.CommonRunLen(a(0), a(1), a(2), a(3), a(4), a.int(5, "step"))),
     // bpe_merge_all(syms, as, bs): sequential greedy-leftmost replay of
     // a whole BPE merge table, each merge one in-place codegen'd pass
     // (no chained per-element HOF folds); see functions.BpeMergeAll
-    "bpe_merge_all" -> { exprs => functions.BpeMergeAll(exprs(0), exprs(1), exprs(2)) },
-    "nfc_normalize" -> { exprs => functions.NfcNormalize(exprs.head) },
+    fn("bpe_merge_all", 3)(a => functions.BpeMergeAll(a(0), a(1), a(2))),
+    fn("nfc_normalize", 1)(a => functions.NfcNormalize(a(0))),
     // char_entropy_q(text): (n, nd, hq) — the fixed-point entropy lane
     // as one tight code-point histogram loop per row (HOF lambdas
     // interpret per element; see functions.CharEntropyQ)
-    "char_entropy_q" -> { exprs => functions.CharEntropyQ(exprs.head) },
+    fn("char_entropy_q", 1)(a => functions.CharEntropyQ(a(0))),
     // Spark ships these sketch expressions for its own runtime join
     // filters but leaves them out of the public registry; the engine
     // exposes them under the upstream names for bounded-size semi-join
     // pre-filters (see Curation.decontaminateBloom).
-    "bloom_filter_agg" -> { exprs =>
+    fn("bloom_filter_agg", 3)(a =>
       new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        exprs(0), exprs(1), exprs(2))
-    },
-    "might_contain" -> { exprs =>
-      new org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1))
-    },
+        a(0), a(1), a(2))),
+    fn("might_contain", 2)(a =>
+      new org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(a(0), a(1))),
   )
+
+  /** Every registered function name. */
+  private[graft] def names: Seq[String] = builders.map(_._1)
 
   private def info(name: String): ExpressionInfo =
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, null, "", "", "", "", "", "", "scala_udf")

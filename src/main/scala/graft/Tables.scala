@@ -18,7 +18,8 @@ object Tables {
     * SchemaGuard flags where unexpected.
     *
     * Every session the engine constructs sets this at builder time
-    * (Bench/Verify/Main/Plans/ScaleProbe/KmerBench/TestSpark), so for
+    * (Bench, Verify, Main, Plans, PlanDump, ScaleProbe, TimeProbe,
+    * KmerBench's partition sweep, TestSpark and the perfbench harness), so for
     * engine-owned sessions it is construction state, not a read side
     * effect. This helper exists for DRIVER-owned sessions — the
     * correctness harness calls `SparkEntry.queries(...)` with its own

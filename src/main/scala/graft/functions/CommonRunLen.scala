@@ -40,7 +40,6 @@ case class CommonRunLen(
     ta: Expression, pa: Expression, tb: Expression, pb: Expression,
     bound: Expression, step: Int) extends Expression {
 
-  require(step == 1 || step == -1, s"common_run_len: step must be +1 or -1, got $step")
 
   override def children: Seq[Expression] = Seq(ta, pa, tb, pb, bound)
   override def nullable: Boolean = children.exists(_.nullable)
@@ -49,6 +48,8 @@ case class CommonRunLen(
 
   override def checkInputDataTypes(): TypeCheckResult =
     (ta.dataType, pa.dataType, tb.dataType, pb.dataType, bound.dataType) match {
+      case _ if step != 1 && step != -1 =>
+        TypeCheckResult.TypeCheckFailure(s"common_run_len: step must be +1 or -1, got $step")
       case (StringType, IntegerType, StringType, IntegerType, IntegerType | LongType) =>
         TypeCheckResult.TypeCheckSuccess
       case other =>

@@ -9,22 +9,20 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 /** Codegen'd longest-common-SUBSEQUENCE length over two array<string>
   * token columns — the ROUGE-L core (Lin 2004). Third custom scalar
   * expression after [[DotI64]] and [[NfcNormalize]], same rationale: the
-  * two-row DP is a tight primitive loop (O(n·m) int ops over two
-  * reusable int rows) inside WholeStageCodegen, where any
-  * higher-order-function formulation would interpret per element and
-  * allocate a fresh row array per step.
+  * two-row DP [[LcsLen.run]] is a tight primitive loop (O(n·m) int ops
+  * over two reusable int rows) that the generated code calls directly,
+  * where any higher-order-function formulation would interpret per
+  * element and allocate a fresh row array per step.
   *
   * Subsequence, not substring — insertions/deletions/reorders reduce
   * the score gracefully, which is exactly what generation eval needs
-  * (the substring analog lives in [[graft.dedup.Winnow]]'s extension
-  * folds). Callers cap token counts (the gate slices to a fixed prefix)
+  * (the substring analog is [[CommonRunLen]]). Callers cap token counts (the gate slices to a fixed prefix)
   * so the quadratic cell count is a compile-time-bounded constant per
   * row, never corpus-dependent.
   *
   * Null elements never match (a null token contributes nothing to the
-  * common subsequence — same treatment in both eval paths, so a direct
-  * SQL caller with containsNull arrays gets a defined answer, not an
-  * NPE); either side empty → 0.
+  * common subsequence, so a direct SQL caller with containsNull arrays
+  * gets a defined answer, not an NPE); either side empty → 0.
   */
 case class LcsLen(left: Expression, right: Expression) extends BinaryExpression {
 
@@ -38,13 +36,23 @@ case class LcsLen(left: Expression, right: Expression) extends BinaryExpression 
   override def dataType: DataType = LongType
   override def prettyName: String = "lcs_len"
 
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(l: Any, r: Any): Any =
+    LcsLen.run(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.LcsLen.run($a, $b)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): LcsLen =
+    copy(left = newLeft, right = newRight)
+}
+
+object LcsLen {
+
+  def run(a: ArrayData, b: ArrayData): Long = {
     val n = a.numElements()
     val m = b.numElements()
-    val prev = new Array[Int](m + 1)
-    val cur = new Array[Int](m + 1)
+    var prev = new Array[Int](m + 1)
+    var cur = new Array[Int](m + 1)
     var i = 0
     while (i < n) {
       val ai = a.getUTF8String(i)
@@ -56,44 +64,9 @@ case class LcsLen(left: Expression, right: Expression) extends BinaryExpression 
           else math.max(prev(j + 1), cur(j))
         j += 1
       }
-      System.arraycopy(cur, 0, prev, 0, m + 1)
+      val t = prev; prev = cur; cur = t
       i += 1
     }
     prev(m).toLong
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val prev = ctx.freshName("prev")
-      val cur = ctx.freshName("cur")
-      val tmp = ctx.freshName("tmp")
-      val ai = ctx.freshName("ai")
-      val bj = ctx.freshName("bj")
-      val v = ctx.freshName("v")
-      s"""
-         |int $n = $a.numElements();
-         |int $m = $b.numElements();
-         |int[] $prev = new int[$m + 1];
-         |int[] $cur = new int[$m + 1];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  org.apache.spark.unsafe.types.UTF8String $ai = $a.getUTF8String($i);
-         |  for (int $j = 0; $j < $m; $j++) {
-         |    int $v;
-         |    org.apache.spark.unsafe.types.UTF8String $bj = $b.getUTF8String($j);
-         |    if ($ai != null && $bj != null && $ai.equals($bj)) { $v = $prev[$j] + 1; }
-         |    else { $v = $prev[$j + 1] > $cur[$j] ? $prev[$j + 1] : $cur[$j]; }
-         |    $cur[$j + 1] = $v;
-         |  }
-         |  int[] $tmp = $prev; $prev = $cur; $cur = $tmp;
-         |}
-         |${ev.value} = (long) $prev[$m];
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): LcsLen =
-    copy(left = newLeft, right = newRight)
 }

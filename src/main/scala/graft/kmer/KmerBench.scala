@@ -3,19 +3,14 @@ package graft.kmer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.Tables
 
-/** Micro-benchmark main deciding the kmer explode strategy: codegen'd
-  * `explode(sequence(...))` (array materialization per row) vs the
-  * interpreted [[KmerGenerator]] (no array, but a codegen boundary).
+/** Shuffle-partition-count sweep at fixed k — the engine analog of the
+  * reference's fixed-N local-size sweep (`runprogram.sh:127`: one
+  * dataset size, `local_size` ∈ powers of two, one metric point per
+  * setting; work-group size is to a SYCL kernel what the shuffle
+  * partition count is to the aggregation stage). Emits one
+  * `{"metric":"partitions_sweep",...}` JSON line per setting — the
+  * reference's points-per-local-size curve, re-expressed.
   * Run: `sbt "runMain graft.kmer.KmerBench"` with SPARK_GRAFT_SF_DIR.
-  *
-  * A second mode sweeps SHUFFLE PARTITION COUNT at fixed k — the
-  * engine analog of the reference's fixed-N local-size sweep
-  * (`runprogram.sh:127`: one dataset size, `local_size` ∈ powers of
-  * two, one metric point per setting; work-group size is to a SYCL
-  * kernel what the shuffle partition count is to the aggregation
-  * stage). Enable with `SPARK_GRAFT_SWEEP_PARTITIONS=1`; emits one
-  * `{"metric":"partitions_sweep",...}` JSON line per setting —
-  * the reference's points-per-local-size curve, re-expressed.
   */
 object KmerBench {
   def main(args: Array[String]): Unit = {
@@ -28,7 +23,6 @@ object KmerBench {
     val bypass = sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "200")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.shuffle.sort.bypassMergeThreshold", bypass)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -51,25 +45,15 @@ object KmerBench {
       math.min(once(), once())
     }
 
-    if (sys.env.get("SPARK_GRAFT_SWEEP_PARTITIONS").exists(_ == "1")) {
-      // Fixed work (k=8 count over the full corpus), partition count
-      // swept in powers of two around the core count. AQE coalescing is
-      // OFF for the sweep — it would re-merge small partitions and
-      // flatten exactly the curve being measured.
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      for (p <- Seq(1, 2, 4, 8, 16, 32, 64, 128, 256)) {
-        spark.conf.set("spark.sql.shuffle.partitions", p)
-        val sec = timed(Kmers.kmersGen(docs, "text", 8).groupBy("word").count())
-        println(f"""{"metric":"partitions_sweep","partitions":$p,"k":8,"bypass_threshold":$bypass,"sec":$sec%.3f}""")
-      }
-    } else {
-      def time(label: String, mk: Int => DataFrame): Unit =
-        for (k <- Seq(3, 8, 21))
-          println(f"$label k=$k%-3d ${timed(mk(k))}%.3f s")
-      time("explode(sequence)", k =>
-        Kmers.kmers(docs, "text", k).groupBy("word").count())
-      time("KmerGenerator    ", k =>
-        Kmers.kmersGen(docs, "text", k).groupBy("word").count())
+    // Fixed work (k=8 count over the full corpus), partition count
+    // swept in powers of two around the core count. AQE coalescing is
+    // OFF for the sweep — it would re-merge small partitions and
+    // flatten exactly the curve being measured.
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    for (p <- Seq(1, 2, 4, 8, 16, 32, 64, 128, 256)) {
+      spark.conf.set("spark.sql.shuffle.partitions", p)
+      val sec = timed(Kmers.kmersGen(docs, "text", 8).groupBy("word").count())
+      println(f"""{"metric":"partitions_sweep","partitions":$p,"k":8,"bypass_threshold":$bypass,"sec":$sec%.3f}""")
     }
     spark.stop()
   }

@@ -2,11 +2,12 @@ package graft.kmer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.ArrayDataGenerator
 
 /** Lazily-evaluated ArrayData of all width-k windows of a string: window
   * i is computed on demand when the Generate loop asks for element i —
@@ -22,8 +23,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * amortized O(k) per window instead of O(len).
   */
 final class KmerWindowsArrayData(s: UTF8String, k: Int) extends ArrayData {
-  private[this] val bytes: Array[Byte] = s.getBytes
-  private[this] val nChars: Int = s.numChars()
+  // null text: no windows (see graft.functions.ArrayDataGenerator)
+  private[this] val bytes: Array[Byte] = if (s == null) Array.emptyByteArray else s.getBytes
+  private[this] val nChars: Int = if (s == null) 0 else s.numChars()
   private[this] val ascii: Boolean = bytes.length == nChars
   private[this] val n: Int = if (nChars < k) 0 else nChars - k + 1
   // sequential-access cursor: byte offset of char `curChar` (multibyte path)
@@ -84,14 +86,12 @@ final class KmerWindowsArrayData(s: UTF8String, k: Int) extends ArrayData {
   * direct analog of the reference's Map kernel (one work-item per
   * character position, reference `src/GPU_Module/GPU.cpp:32-45`).
   *
-  * Implements the `CollectionGenerator` contract so `GenerateExec`
-  * keeps the explode inside WholeStageCodegen: `doGenCode` yields a
+  * An [[ArrayDataGenerator]], so `GenerateExec` keeps the explode
+  * inside WholeStageCodegen: `doGenCode` yields a
   * [[KmerWindowsArrayData]] — a LAZY collection whose elements are
-  * computed as the generated loop indexes them — so the codegen path
-  * materializes neither the O(len) position array of the
-  * `explode(sequence(...))` formulation nor an O(len) window array.
-  * The interpreted `eval` (non-WSCG contexts) walks the same lazy
-  * collection. Measured in [[KmerBench]] at k ∈ {3, 8, 21}.
+  * computed as the generated loop indexes them — so neither an O(len)
+  * position array nor an O(len) window array is materialized. The
+  * interpreted `eval` iterates the same collection.
   *
   * With `withPos = true` (`kmer_windows_pos`) the generator also emits
   * the 0-based window ordinal — the `posexplode` analog, used by
@@ -100,7 +100,7 @@ final class KmerWindowsArrayData(s: UTF8String, k: Int) extends ArrayData {
   * no-materialization property is unchanged.
   */
 case class KmerGenerator(child: Expression, k: Int, withPos: Boolean = false)
-    extends UnaryExpression with CollectionGenerator {
+    extends UnaryExpression with ArrayDataGenerator {
 
   override def position: Boolean = withPos
   override def inline: Boolean = false
@@ -120,27 +120,8 @@ case class KmerGenerator(child: Expression, k: Int, withPos: Boolean = false)
       case other => TypeCheckResult.TypeCheckFailure(s"kmer_windows needs a string column, got $other")
     }
 
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = child.eval(input)
-    if (v == null) Iterator.empty
-    else {
-      val arr = new KmerWindowsArrayData(v.asInstanceOf[UTF8String], k)
-      val n = arr.numElements()
-      if (n == 0) Iterator.empty
-      else new Iterator[InternalRow] {
-        private[this] var i = 0
-        override def hasNext: Boolean = i < n
-        override def next(): InternalRow = {
-          val w = arr.getUTF8String(i)
-          val row =
-            if (withPos) new GenericInternalRow(Array[Any](i, w))
-            else new GenericInternalRow(Array[Any](w))
-          i += 1
-          row
-        }
-      }
-    }
-  }
+  override protected def collection(inputs: Seq[Any]): ArrayData =
+    new KmerWindowsArrayData(inputs.head.asInstanceOf[UTF8String], k)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"new graft.kmer.KmerWindowsArrayData($c, $k)")

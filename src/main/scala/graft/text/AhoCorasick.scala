@@ -3,11 +3,12 @@ package graft.text
 import scala.collection.mutable
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, CollectionGenerator, Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.{ArrayDataGenerator, StructRowsArrayData}
 
 /** Aho–Corasick multi-pattern literal matching (Aho & Corasick 1975,
   * "Efficient String Matching: An Aid to Bibliographic Search", CACM)
@@ -149,13 +150,12 @@ object AhoCorasick {
     patterns.mkString("|")
   }
 
-  /** Static entry the generated code calls: rows (pid, pos). Null
-    * text yields zero rows here rather than relying on the caller's
-    * null branch — GenerateExec's collection codegen evaluates the
-    * call before its null check.
+  /** Static entry the generated code and `eval` both call: rows
+    * (pid, pos). A null input yields zero rows (see
+    * [[graft.functions.ArrayDataGenerator]]).
     */
   def matchRows(text: UTF8String, patsSpec: UTF8String): ACMatchRows = {
-    if (text == null) return new ACMatchRows(Array.emptyIntArray, Array.emptyIntArray)
+    if (text == null || patsSpec == null) return new ACMatchRows(Array.emptyIntArray, Array.emptyIntArray)
     val (pids, poss) = automaton(patsSpec.toString)
       .matchAll(text.toString.codePoints().toArray)
     new ACMatchRows(pids, poss)
@@ -165,34 +165,11 @@ object AhoCorasick {
 /** Eager (pid, pos) rows; same read-only contract as
   * [[RollingHashRows]].
   */
-final class ACMatchRows(val pids: Array[Int], val poss: Array[Int]) extends ArrayData {
+final class ACMatchRows(val pids: Array[Int], val poss: Array[Int])
+    extends StructRowsArrayData(2) {
   override def numElements(): Int = pids.length
   override def getStruct(i: Int, numFields: Int): InternalRow =
     new GenericInternalRow(Array[Any](pids(i), poss(i)))
-  override def isNullAt(i: Int): Boolean = false
-  override def get(ordinal: Int, dataType: DataType): AnyRef = getStruct(ordinal, 2)
-  override def array: Array[Any] = Array.tabulate[Any](pids.length)(getStruct(_, 2))
-  override def copy(): ArrayData = new GenericArrayData(array)
-  private def unsupported(): Nothing =
-    throw new UnsupportedOperationException("AC match rows are struct-typed and read-only")
-  override def setNullAt(i: Int): Unit = unsupported()
-  override def update(i: Int, value: Any): Unit = unsupported()
-  override def getBoolean(i: Int): Boolean = unsupported()
-  override def getByte(i: Int): Byte = unsupported()
-  override def getShort(i: Int): Short = unsupported()
-  override def getInt(i: Int): Int = unsupported()
-  override def getLong(i: Int): Long = unsupported()
-  override def getFloat(i: Int): Float = unsupported()
-  override def getDouble(i: Int): Double = unsupported()
-  override def getDecimal(i: Int, precision: Int, scale: Int): org.apache.spark.sql.types.Decimal = unsupported()
-  override def getBinary(i: Int): Array[Byte] = unsupported()
-  override def getUTF8String(i: Int): UTF8String = unsupported()
-  override def getGeography(i: Int): org.apache.spark.unsafe.types.GeographyVal = unsupported()
-  override def getGeometry(i: Int): org.apache.spark.unsafe.types.GeometryVal = unsupported()
-  override def getInterval(i: Int): org.apache.spark.unsafe.types.CalendarInterval = unsupported()
-  override def getVariant(i: Int): org.apache.spark.unsafe.types.VariantVal = unsupported()
-  override def getArray(i: Int): ArrayData = unsupported()
-  override def getMap(i: Int): org.apache.spark.sql.catalyst.util.MapData = unsupported()
 }
 
 /** Generator `ac_matches(text, 'p1|p2|…')` → rows (pid INT, pos INT).
@@ -200,7 +177,7 @@ final class ACMatchRows(val pids: Array[Int], val poss: Array[Int]) extends Arra
   * compiled once per executor and cached by spec.
   */
 case class AhoCorasickGenerator(left: Expression, right: Expression)
-    extends BinaryExpression with CollectionGenerator {
+    extends BinaryExpression with ArrayDataGenerator {
 
   override def position: Boolean = false
   override def inline: Boolean = true
@@ -220,22 +197,8 @@ case class AhoCorasickGenerator(left: Expression, right: Expression)
           "ac_matches needs (string column, foldable string pattern spec)")
     }
 
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val t = left.eval(input)
-    val p = right.eval(input)
-    if (t == null || p == null) Iterator.empty
-    else {
-      val arr = AhoCorasick.matchRows(
-        t.asInstanceOf[UTF8String], p.asInstanceOf[UTF8String])
-      val n = arr.numElements()
-      if (n == 0) Iterator.empty
-      else new Iterator[InternalRow] {
-        private[this] var i = 0
-        override def hasNext: Boolean = i < n
-        override def next(): InternalRow = { val r = arr.getStruct(i, 2); i += 1; r }
-      }
-    }
-  }
+  override protected def collection(inputs: Seq[Any]): ArrayData =
+    AhoCorasick.matchRows(inputs(0).asInstanceOf[UTF8String], inputs(1).asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (t, p) => s"graft.text.AhoCorasick.matchRows($t, $p)")

@@ -32,7 +32,7 @@ import graft.{Checkpoints, EngineQuery, Tables}
   *    materialized).
   *
   * Merge application is greedy leftmost within each word — the
-  * standard BPE pass — expressed as an `aggregate()` fold over the
+  * standard BPE pass — run by the codegen'd `bpe_merge_all` over the
   * symbol array: append the next symbol, or fuse it into the last
   * element when (last, next) equals the merge pair. The DuckDB oracle
   * replays the SAME fold with `list_reduce` over an unrolled
@@ -90,32 +90,11 @@ object Bpe {
       .agg(sum(col("c")).as("cnt"))
       .orderBy(col("cnt").desc, col("a"), col("b"))
 
-  /** One greedy-leftmost merge pass over a symbol array: fuse every
-    * non-overlapping (a, b) adjacency, scanning left to right (the
-    * fold's accumulator ends with the merged symbol, so an `aaa` word
-    * under merge (a,a) becomes [aa, a], not [a, aa]).
-    *
-    * No longer on the hot path (r20: every replay site runs the
-    * codegen'd `bpe_merge_all` via [[applyMerges]] instead); kept as
-    * BpeSpec's differential reference — the spec proves the codegen
-    * passes emit bit-identical symbol arrays to chains of this fold.
-    */
-  private[text] def applyMerge(syms: Column, a: String, b: String): Column =
-    aggregate(
-      syms,
-      array().cast("array<string>"),
-      (acc, x) =>
-        when(
-          size(acc) > 0 && element_at(acc, -1) === lit(a) && x === lit(b),
-          concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
-          .otherwise(concat(acc, array(x))))
-
   /** Sequential replay of a whole merge table over a symbol-array
-    * column — the hot-path form of chained [[applyMerge]] folds: ONE
-    * codegen'd expression (`bpe_merge_all`) runs every merge as an
-    * in-place primitive pass (r20 optimization round; bit-identical
-    * arrays — differential property in BpeSpec). No-op on an empty
-    * merge list.
+    * column: ONE codegen'd expression (`bpe_merge_all`) runs every
+    * merge as a greedy-leftmost in-place primitive pass (bit-identical
+    * to chained `aggregate()` merge folds — differential property in
+    * BpeSpec). No-op on an empty merge list.
     */
   private def applyMerges(syms: Column, merges: Seq[(String, String)]): Column =
     if (merges.isEmpty) syms

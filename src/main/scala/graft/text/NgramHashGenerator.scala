@@ -2,10 +2,11 @@ package graft.text
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, GenericInternalRow, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructType}
+import graft.functions.{ArrayDataGenerator, StructRowsArrayData}
 
 /** Lazily-evaluated ArrayData of `(n, gh, glen)` rows for every
   * word-n-gram window of a token array, n ∈ [minN, maxN] — the n-gram
@@ -26,8 +27,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * block lookup O(1) amortized. Construction is O(T) in the token
   * count; element access allocates only the 3-field output row.
   */
-final class NgramHashArrayData(toks: ArrayData, minN: Int, maxN: Int) extends ArrayData {
-  private[this] val t: Int = toks.numElements()
+final class NgramHashArrayData(toks: ArrayData, minN: Int, maxN: Int)
+    extends StructRowsArrayData(3) {
+  // null tokens: no windows (see graft.functions.ArrayDataGenerator)
+  private[this] val t: Int = if (toks == null) 0 else toks.numElements()
   // prefix polynomial hashes and prefix char lengths
   private[this] val hp: Array[Long] = new Array[Long](t + 1)
   private[this] val lp: Array[Long] = new Array[Long](t + 1)
@@ -71,33 +74,6 @@ final class NgramHashArrayData(toks: ArrayData, minN: Int, maxN: Int) extends Ar
     val glen = lp(pos + n) - lp(pos) + (n - 1)
     new GenericInternalRow(Array[Any](n, gh, glen))
   }
-
-  override def isNullAt(i: Int): Boolean = false
-  override def get(ordinal: Int, dataType: DataType): AnyRef = getStruct(ordinal, 3)
-
-  override def array: Array[Any] = Array.tabulate[Any](total)(i => getStruct(i, 3))
-  override def copy(): ArrayData = new GenericArrayData(array)
-
-  private def unsupported(): Nothing =
-    throw new UnsupportedOperationException("ngram hash rows are struct-typed and read-only")
-  override def setNullAt(i: Int): Unit = unsupported()
-  override def update(i: Int, value: Any): Unit = unsupported()
-  override def getBoolean(i: Int): Boolean = unsupported()
-  override def getByte(i: Int): Byte = unsupported()
-  override def getShort(i: Int): Short = unsupported()
-  override def getInt(i: Int): Int = unsupported()
-  override def getLong(i: Int): Long = unsupported()
-  override def getFloat(i: Int): Float = unsupported()
-  override def getDouble(i: Int): Double = unsupported()
-  override def getDecimal(i: Int, precision: Int, scale: Int): org.apache.spark.sql.types.Decimal = unsupported()
-  override def getBinary(i: Int): Array[Byte] = unsupported()
-  override def getUTF8String(i: Int): org.apache.spark.unsafe.types.UTF8String = unsupported()
-  override def getGeography(i: Int): org.apache.spark.unsafe.types.GeographyVal = unsupported()
-  override def getGeometry(i: Int): org.apache.spark.unsafe.types.GeometryVal = unsupported()
-  override def getInterval(i: Int): org.apache.spark.unsafe.types.CalendarInterval = unsupported()
-  override def getVariant(i: Int): org.apache.spark.unsafe.types.VariantVal = unsupported()
-  override def getArray(i: Int): ArrayData = unsupported()
-  override def getMap(i: Int): org.apache.spark.sql.catalyst.util.MapData = unsupported()
 }
 
 object NgramHashArrayData {
@@ -110,8 +86,8 @@ object NgramHashArrayData {
   * `(n INT, gh BIGINT, glen BIGINT)` for every word-n-gram window —
   * the repetition family's replacement for "explode 9 n-values ×
   * explode joined gram strings": one generator pass, no per-gram
-  * string construction, no 9× re-walk of the token array. Implements
-  * [[CollectionGenerator]] with `inline = true` so `GenerateExec`
+  * string construction, no 9× re-walk of the token array. An
+  * [[ArrayDataGenerator]] with `inline = true`, so `GenerateExec`
   * consumes the LAZY [[NgramHashArrayData]] inside WholeStageCodegen
   * (same contract as [[graft.kmer.KmerGenerator]]).
   *
@@ -128,7 +104,7 @@ object NgramHashArrayData {
   * make window count depend on data the generator streams past.
   */
 case class NgramHashGenerator(child: Expression, minN: Int, maxN: Int)
-    extends UnaryExpression with CollectionGenerator {
+    extends UnaryExpression with ArrayDataGenerator {
 
   override def position: Boolean = false
   override def inline: Boolean = true
@@ -149,20 +125,8 @@ case class NgramHashGenerator(child: Expression, minN: Int, maxN: Int)
         TypeCheckResult.TypeCheckFailure(s"ngram_hashes needs array<string> tokens, got $other")
     }
 
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = child.eval(input)
-    if (v == null) Iterator.empty
-    else {
-      val arr = new NgramHashArrayData(v.asInstanceOf[ArrayData], minN, maxN)
-      val n = arr.numElements()
-      if (n == 0) Iterator.empty
-      else new Iterator[InternalRow] {
-        private[this] var i = 0
-        override def hasNext: Boolean = i < n
-        override def next(): InternalRow = { val r = arr.getStruct(i, 3); i += 1; r }
-      }
-    }
-  }
+  override protected def collection(inputs: Seq[Any]): ArrayData =
+    new NgramHashArrayData(inputs.head.asInstanceOf[ArrayData], minN, maxN)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"new graft.text.NgramHashArrayData($c, $minN, $maxN)")

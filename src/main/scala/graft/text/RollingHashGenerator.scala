@@ -2,11 +2,12 @@ package graft.text
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{CollectionGenerator, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.{ArrayDataGenerator, StructRowsArrayData}
 
 /** Portable rolling content hash over character k-windows, plus the
   * winnowing (MOSS) fingerprint selection on top of it.
@@ -144,69 +145,40 @@ object RollingHash {
 /** Eager (pos, h) array for the generator; construction is one O(n)
   * rolling pass, element access allocates only the output row.
   */
-final class RollingHashRows(val pos: Array[Int], val hs: Array[Long]) extends ArrayData {
+final class RollingHashRows(val pos: Array[Int], val hs: Array[Long])
+    extends StructRowsArrayData(2) {
   override def numElements(): Int = pos.length
   override def getStruct(i: Int, numFields: Int): InternalRow =
     new GenericInternalRow(Array[Any](pos(i), hs(i)))
-  override def isNullAt(i: Int): Boolean = false
-  override def get(ordinal: Int, dataType: DataType): AnyRef = getStruct(ordinal, 2)
-  override def array: Array[Any] = Array.tabulate[Any](pos.length)(getStruct(_, 2))
-  override def copy(): ArrayData = new GenericArrayData(array)
-  private def unsupported(): Nothing =
-    throw new UnsupportedOperationException("rolling hash rows are struct-typed and read-only")
-  override def setNullAt(i: Int): Unit = unsupported()
-  override def update(i: Int, value: Any): Unit = unsupported()
-  override def getBoolean(i: Int): Boolean = unsupported()
-  override def getByte(i: Int): Byte = unsupported()
-  override def getShort(i: Int): Short = unsupported()
-  override def getInt(i: Int): Int = unsupported()
-  override def getLong(i: Int): Long = unsupported()
-  override def getFloat(i: Int): Float = unsupported()
-  override def getDouble(i: Int): Double = unsupported()
-  override def getDecimal(i: Int, precision: Int, scale: Int): org.apache.spark.sql.types.Decimal = unsupported()
-  override def getBinary(i: Int): Array[Byte] = unsupported()
-  override def getUTF8String(i: Int): UTF8String = unsupported()
-  override def getGeography(i: Int): org.apache.spark.unsafe.types.GeographyVal = unsupported()
-  override def getGeometry(i: Int): org.apache.spark.unsafe.types.GeometryVal = unsupported()
-  override def getInterval(i: Int): org.apache.spark.unsafe.types.CalendarInterval = unsupported()
-  override def getVariant(i: Int): org.apache.spark.unsafe.types.VariantVal = unsupported()
-  override def getArray(i: Int): ArrayData = unsupported()
-  override def getMap(i: Int): org.apache.spark.sql.catalyst.util.MapData = unsupported()
 }
 
 object RollingHashRows {
-  /** All k-windows: (1-based pos, combined hash). */
-  def all(s: UTF8String, k: Int): RollingHashRows = {
-    val hs = RollingHash.windowHashes(RollingHash.codePoints(s), k)
-    new RollingHashRows(Array.tabulate(hs.length)(_ + 1), hs)
-  }
-
-  /** Content-defined sample: only windows with h % keepMod == 0 —
-    * the discarded majority never materializes as generator rows (a
-    * downstream `WHERE h % m = 0` pays one output-row allocation per
-    * window; at 1/8 keep that is 8× the allocations for the same
-    * result).
+  /** The generator's rows, (1-based pos, combined hash): the
+    * winnow-selected windows when `w > 0`, else the content-defined
+    * sample of windows with h % keepMod == 0 (every window at
+    * keepMod = 1). Unselected windows never become generator rows: a
+    * downstream `WHERE h % m = 0` would pay one output-row allocation
+    * per window, 8× the allocations at 1/8 keep. Null text has no
+    * windows (see [[graft.functions.ArrayDataGenerator]]).
     */
-  def sampled(s: UTF8String, k: Int, keepMod: Int): RollingHashRows = {
-    val hs = RollingHash.windowHashes(RollingHash.codePoints(s), k)
-    val sp = new Array[Int](hs.length)
-    val sh = new Array[Long](hs.length)
-    var n = 0
-    var i = 0
-    while (i < hs.length) {
-      if (hs(i) % keepMod == 0) { sp(n) = i + 1; sh(n) = hs(i); n += 1 }
-      i += 1
-    }
-    new RollingHashRows(
-      java.util.Arrays.copyOfRange(sp, 0, n), java.util.Arrays.copyOfRange(sh, 0, n))
-  }
-
-  /** Winnow-selected fingerprints: (1-based pos, combined hash). */
-  def winnowed(s: UTF8String, k: Int, w: Int): RollingHashRows = {
-    val hs = RollingHash.windowHashes(RollingHash.codePoints(s), k)
-    val sel = RollingHash.winnowSelect(hs, w)
-    val sh = new Array[Long](sel.length)
+  def of(s: UTF8String, k: Int, w: Int, keepMod: Int): RollingHashRows = {
+    val hs =
+      if (s == null) Array.emptyLongArray
+      else RollingHash.windowHashes(RollingHash.codePoints(s), k)
+    val sel =
+      if (w > 0) RollingHash.winnowSelect(hs, w)
+      else {
+        val kept = new Array[Int](hs.length)
+        var n = 0
+        var i = 0
+        while (i < hs.length) {
+          if (hs(i) % keepMod == 0) { kept(n) = i; n += 1 }
+          i += 1
+        }
+        java.util.Arrays.copyOf(kept, n)
+      }
     val sp = new Array[Int](sel.length)
+    val sh = new Array[Long](sel.length)
     var i = 0
     while (i < sel.length) { sp(i) = sel(i) + 1; sh(i) = hs(sel(i)); i += 1 }
     new RollingHashRows(sp, sh)
@@ -216,13 +188,14 @@ object RollingHashRows {
 /** Catalyst Generator `rolling_hashes(text, k)` → rows
   * `(pos INT 1-based, h BIGINT)` for every character k-window, and
   * `winnow_fingerprints(text, k, w)` → the winnow-selected subset.
-  * [[CollectionGenerator]] with `inline = true` so `GenerateExec`
+  * An [[ArrayDataGenerator]] with `inline = true`, so `GenerateExec`
   * consumes the rows inside WholeStageCodegen (the
-  * [[NgramHashGenerator]] contract).
+  * [[NgramHashGenerator]] contract); both paths build the rows with
+  * [[RollingHashRows.of]], which picks the selection mode.
   */
 case class RollingHashGenerator(
     child: Expression, k: Int, winnowW: Int = 0, keepMod: Int = 1)
-    extends UnaryExpression with CollectionGenerator {
+    extends UnaryExpression with ArrayDataGenerator {
 
   override def position: Boolean = false
   override def inline: Boolean = true
@@ -246,33 +219,11 @@ case class RollingHashGenerator(
         TypeCheckResult.TypeCheckFailure(s"rolling_hashes needs a string column, got $other")
     }
 
-  private def rows(s: UTF8String): RollingHashRows =
-    if (winnowW > 0) RollingHashRows.winnowed(s, k, winnowW)
-    else if (keepMod > 1) RollingHashRows.sampled(s, k, keepMod)
-    else RollingHashRows.all(s, k)
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = child.eval(input)
-    if (v == null) Iterator.empty
-    else {
-      val arr = rows(v.asInstanceOf[UTF8String])
-      val n = arr.numElements()
-      if (n == 0) Iterator.empty
-      else new Iterator[InternalRow] {
-        private[this] var i = 0
-        override def hasNext: Boolean = i < n
-        override def next(): InternalRow = { val r = arr.getStruct(i, 2); i += 1; r }
-      }
-    }
-  }
+  override protected def collection(inputs: Seq[Any]): ArrayData =
+    RollingHashRows.of(inputs.head.asInstanceOf[UTF8String], k, winnowW, keepMod)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (winnowW > 0)
-      defineCodeGen(ctx, ev, c => s"graft.text.RollingHashRows.winnowed($c, $k, $winnowW)")
-    else if (keepMod > 1)
-      defineCodeGen(ctx, ev, c => s"graft.text.RollingHashRows.sampled($c, $k, $keepMod)")
-    else
-      defineCodeGen(ctx, ev, c => s"graft.text.RollingHashRows.all($c, $k)")
+    defineCodeGen(ctx, ev, c => s"graft.text.RollingHashRows.of($c, $k, $winnowW, $keepMod)")
 
   override protected def withNewChildInternal(newChild: Expression): RollingHashGenerator =
     copy(child = newChild)

@@ -1,14 +1,15 @@
 package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, CollectionGenerator, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.functions._
 import graft.{EngineQuery, Tables}
+import graft.functions.ArrayDataGenerator
 
 /** Greedy longest-match-first subword tokenization — the WordPiece
   * inference rule (Wu et al. 2016; the tokenizer BERT ships): at each
@@ -123,9 +124,9 @@ object WordPiece {
       new Trie(pieces)
     })
 
-  /** Static entry for generated code (null-tolerant, see AhoCorasick). */
+  /** Static entry the generated code and `eval` both call (null-tolerant, see AhoCorasick). */
   def segmentRows(word: UTF8String, spec: UTF8String): ACMatchRows = {
-    if (word == null) return new ACMatchRows(Array.emptyIntArray, Array.emptyIntArray)
+    if (word == null || spec == null) return new ACMatchRows(Array.emptyIntArray, Array.emptyIntArray)
     val (pids, poss) = trie(spec.toString).segment(word.toString.codePoints().toArray)
     new ACMatchRows(pids, poss)
   }
@@ -309,7 +310,7 @@ object WordPiece {
   * must be foldable; the trie compiles once per executor.
   */
 case class WordPieceGenerator(left: Expression, right: Expression)
-    extends BinaryExpression with CollectionGenerator {
+    extends BinaryExpression with ArrayDataGenerator {
 
   override def position: Boolean = false
   override def inline: Boolean = true
@@ -329,22 +330,8 @@ case class WordPieceGenerator(left: Expression, right: Expression)
           "wordpiece_pieces needs (string column, foldable string vocab spec)")
     }
 
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val t = left.eval(input)
-    val p = right.eval(input)
-    if (t == null || p == null) Iterator.empty
-    else {
-      val arr = WordPiece.segmentRows(
-        t.asInstanceOf[UTF8String], p.asInstanceOf[UTF8String])
-      val n = arr.numElements()
-      if (n == 0) Iterator.empty
-      else new Iterator[InternalRow] {
-        private[this] var i = 0
-        override def hasNext: Boolean = i < n
-        override def next(): InternalRow = { val r = arr.getStruct(i, 2); i += 1; r }
-      }
-    }
-  }
+  override protected def collection(inputs: Seq[Any]): ArrayData =
+    WordPiece.segmentRows(inputs(0).asInstanceOf[UTF8String], inputs(1).asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (t, p) => s"graft.text.WordPiece.segmentRows($t, $p)")

@@ -19,6 +19,12 @@ class KmersSpec extends AnyFunSuite with Matchers {
     Kmers.kmerCounts(texts.toDF("text"), "text", k)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
+  /** Spark-free reference: window counts over each text's code points. */
+  private def codePointCounts(texts: Seq[String], k: Int): Map[String, Long] =
+    texts
+      .flatMap(_.codePoints().toArray.sliding(k).filter(_.length == k).map(new String(_, 0, k)))
+      .groupBy(identity).view.mapValues(_.size.toLong).toMap
+
   test("ABAB, k=2 -> AB:2, BA:1") {
     counts(Seq("ABAB"), 2) shouldBe Map("AB" -> 2L, "BA" -> 1L)
   }
@@ -38,9 +44,9 @@ class KmersSpec extends AnyFunSuite with Matchers {
 
   test("k bounds are enforced (reference MAXK=64)") {
     an[IllegalArgumentException] should be thrownBy
-      Kmers.kmers(Seq("A").toDF("text"), "text", 0)
+      Kmers.kmersGen(Seq("A").toDF("text"), "text", 0)
     an[IllegalArgumentException] should be thrownBy
-      Kmers.kmers(Seq("A").toDF("text"), "text", 65)
+      Kmers.kmersGen(Seq("A").toDF("text"), "text", 65)
   }
 
   test("windows never cross rows (file barrier)") {
@@ -59,13 +65,14 @@ class KmersSpec extends AnyFunSuite with Matchers {
     Kmers.totalWindows(df, "text", 3).collect()(0).getLong(0) shouldBe 3L
   }
 
-  test("KmerGenerator path produces exactly the explode-path windows") {
-    val corpus = Seq("ABABCCA", "XY", "", "GATTACA")
+  test("KmerGenerator windows equal a Spark-free code-point window count") {
+    // combining marks and an astral char: each code point is one position
+    val corpus = Seq("ABABCCA", "XY", "", "GATTACA", "cafe\u0301 ne\u0301e", "\uD83D\uDE00ab\uD83D\uDE00")
     for (k <- Seq(1, 2, 3, 7)) {
       val viaGen = Kmers.kmersGen(corpus.toDF("text"), "text", k)
         .groupBy("word").count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      viaGen shouldBe counts(corpus, k)
+      viaGen shouldBe codePointCounts(corpus, k)
     }
   }
 
@@ -90,7 +97,7 @@ class KmersSpec extends AnyFunSuite with Matchers {
     viaGen shouldBe Map(
       "hé" -> 1L, "él" -> 1L, "ll" -> 1L, "lò" -> 1L,
       "日本" -> 1L, "本語" -> 1L, "語で" -> 1L, "です" -> 1L)
-    viaGen shouldBe counts(Seq("héllò", "日本語です"), 2)
+    viaGen shouldBe codePointCounts(Seq("héllò", "日本語です"), 2)
   }
 
   test("verifyJoin classifies match / mismatch / missing") {

@@ -2,7 +2,7 @@ package graft.text
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, functions}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -170,6 +170,23 @@ class BpeSpec extends AnyFunSuite with Matchers {
     got.map(_._1) should not contain 3L
   }
 
+  /** One greedy-leftmost merge pass over a symbol array as an
+    * `aggregate()` fold: fuse every non-overlapping (a, b) adjacency,
+    * scanning left to right (the accumulator ends with the merged
+    * symbol, so an `aaa` word under merge (a,a) becomes [aa, a], not
+    * [a, aa]). The reference `bpe_merge_all` must match, merge for
+    * merge.
+    */
+  private def applyMerge(syms: Column, a: String, b: String): Column =
+    aggregate(
+      syms,
+      array().cast("array<string>"),
+      (acc, x) =>
+        when(
+          functions.size(acc) > 0 && element_at(acc, -1) === lit(a) && x === lit(b),
+          concat(slice(acc, lit(1), functions.size(acc) - 1), array(lit(a + b))))
+          .otherwise(concat(acc, array(x))))
+
   test("bpe_merge_all ≡ chained applyMerge folds on randomized symbol arrays (r20)") {
     graft.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(67)
@@ -188,7 +205,7 @@ class BpeSpec extends AnyFunSuite with Matchers {
         Array.fill(1 + rnd.nextInt(10))(alphabet(rnd.nextInt(alphabet.length))).mkString)
       val df = words.toDF("w").select(split(col("w"), "").as("syms"))
       val oldCol = merges.foldLeft(col("syms")) { case (c0, (a, b)) =>
-        Bpe.applyMerge(c0, a, b)
+        applyMerge(c0, a, b)
       }
       val newCol = call_function("bpe_merge_all", col("syms"),
         typedlit(merges.map(_._1)), typedlit(merges.map(_._2)))
